@@ -71,20 +71,6 @@ class DedupConfig:
     # J in [0.5, 0.8)), where candidates outnumber true pairs.
     verify_est_margin: float | None = None
 
-    # exact-verify data movement strategy:
-    #   'rehash' (default): join candidate pairs (broadcast when hinted)
-    #     with the pruned reps TEXT and recompute both shingle sets inside
-    #     one vectorized kernel per pair. Moves ~2.5-4.2 KB/doc of text
-    #     once; nothing wide is emitted from Python (score only).
-    #   'arrays': recompute shingle arrays for candidate urls via UDF, then
-    #     join the ~5.6 KB/doc ARRAY<BIGINT> through both pair joins — the
-    #     r3-measured 0.326-efficiency stage (arrays are wider than the
-    #     text they derive from, and array ser/deser through shuffle costs
-    #     far more CPU/byte than string pages).
-    # Identical output by construction: same blake2b k-gram hash chain,
-    # |A∩B|/|A∪B| over the same uint64 sets, same double division.
-    verify_strategy: str = "rehash"
-
     # skew handling (north rule: explicit salting of hot LSH buckets)
     bucket_cap: int = 2000               # max rows per (band_idx, band_hash) bucket
     # size of the salted sub-buckets that hot-bucket members all-pair
@@ -101,7 +87,7 @@ class DedupConfig:
     salt_sub_cap: int = 64
     # buckets above this are MEGA buckets: star edges only, no salted
     # sub-bucket pairs. Rationale: salted work per hot bucket is
-    # n * bucket_cap / 2 per band — at web scale a boilerplate family with
+    # n * salt_sub_cap / 2 per band — at web scale a boilerplate family with
     # 10^5..10^7 near-identical members would emit 10^8+ candidates per band
     # (measured blowup: a 10%-near-dup-clique 1M corpus produced 1.6e9
     # candidates under salt-everything). In a true near-dup CLIQUE every
@@ -151,8 +137,6 @@ class DedupConfig:
             raise ValueError(
                 "verify_est_margin must be in [0, jaccard_threshold) or None"
             )
-        if self.verify_strategy not in ("rehash", "arrays"):
-            raise ValueError("verify_strategy must be 'rehash' or 'arrays'")
         if self.simhash_token_hash not in ("blake2b", "fnv1a"):
             raise ValueError("simhash_token_hash must be 'blake2b' or 'fnv1a'")
 

@@ -8,8 +8,7 @@ Reference semantics being preserved:
   * radius similarity search with a threshold (QdrantRepository.cs:184-206)
     -> LSH band self-join, an equi-join by construction,
   * exact re-verification at the threshold (QdrantRepository.cs:192) ->
-    exact Jaccard on stored shingle-hash sets, computed JVM-side via
-    array_intersect/array_union (no Python in the verify hot path).
+    exact shingle Jaccard per candidate pair (verify_pairs).
 
 Scale design (north rule: explicit skew handling):
   * signatures are computed once per DISTINCT content (caller passes the
@@ -20,7 +19,9 @@ Scale design (north rule: explicit skew handling):
     10k-member near-dup bucket yields ~10k + 32*10k candidates per band,
     not 50M; buckets above ``cfg.star_only_cap`` (mega boilerplate cliques)
     keep star edges only (FIXTURES.md §1 block E is the adversarial
-    fixture; tools/skew_bench.py is the bench-scale one);
+    fixture; tools/skew_bench.py is the bench-scale one). candidate_pairs
+    is the one implementation: the simhash, pHash, video and block-mean
+    band joins and both incremental paths call it too;
   * sub-cap buckets go through a plain equi-join; AQE skew-join splitting
     handles residual per-key hotness;
   * all shuffled relations are narrow (ids + 64-bit hashes); the wide
@@ -101,12 +102,13 @@ def _tokenize_hashed(
     per-row ``t.split(" ")`` + object-array ``pd.factorize`` tokenizer
     (millions of per-token PyObjects; measured ~2.6x slower) with zero
     change in values. Returns (per-row token counts int64, flat per-token
-    uint64 hash array)."""
+    uint64 hash array). 64-bit string offsets: a batch whose text exceeds
+    2 GiB must not raise ArrowCapacityError."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     cache = {} if cache is None else cache
-    arr = pa.array(texts, type=pa.string())
+    arr = pa.array(texts, type=pa.large_string())
     toks = pc.split_pattern(arr, " ")
     lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
     enc = pc.list_flatten(toks).dictionary_encode()
@@ -161,21 +163,6 @@ def _batch_shingle_hashes(texts: list[str], k: int) -> list[np.ndarray]:
     return out
 
 
-def make_shingle_udf(cfg: DedupConfig = CANONICAL):
-    from pyspark.sql.functions import pandas_udf
-
-    k = cfg.shingle_k
-
-    @pandas_udf(ArrayType(LongType()))
-    def shingle_hashes(text: pd.Series) -> pd.Series:
-        arrs = _batch_shingle_hashes(
-            [t if t is not None else "" for t in text], k
-        )
-        return pd.Series([a.view(np.int64).tolist() for a in arrs])
-
-    return shingle_hashes
-
-
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     """num_perm multiply-shift hash params, seeded (FIXTURES.md §3 seed=42).
     Universal family h_i(x) = a_i*x + b_i mod 2^64 with odd a_i."""
@@ -193,7 +180,6 @@ def _minhash_of(
     a: np.ndarray,
     b: np.ndarray,
     num_perm: int,
-    max_cells: int | None = None,  # kept for call-site compat; unused
 ) -> list[list[int]]:
     """MinHash signatures for a list of shingle-hash arrays.
 
@@ -242,26 +228,6 @@ def _minhash_of(
     return out
 
 
-def make_minhash_udf(cfg: DedupConfig = CANONICAL):
-    from pyspark.sql.functions import pandas_udf
-
-    a, b = _perm_params(cfg)
-    num_perm = cfg.num_perm
-    max_cells = 4_000_000
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_sig(shingles: pd.Series) -> pd.Series:
-        arrs = [
-            np.asarray(s, dtype=np.int64).view(_U64)
-            if s is not None and len(s) > 0
-            else np.empty(0, dtype=_U64)
-            for s in shingles
-        ]
-        return pd.Series(_minhash_of(arrs, a, b, num_perm, max_cells), dtype=object)
-
-    return minhash_sig
-
-
 def make_signature_udf(cfg: DedupConfig = CANONICAL):
     """Fused shingles+minhash in ONE pandas UDF (single Arrow round-trip;
     the shingle arrays never cross JVM<->Python twice)."""
@@ -270,12 +236,11 @@ def make_signature_udf(cfg: DedupConfig = CANONICAL):
     k = cfg.shingle_k
     a, b = _perm_params(cfg)
     num_perm = cfg.num_perm
-    max_cells = 4_000_000
 
     @pandas_udf("shingles array<bigint>, minhash array<bigint>")
     def signature(text: pd.Series) -> pd.DataFrame:
         arrs = _batch_shingle_hashes([t if t is not None else "" for t in text], k)
-        mins = _minhash_of(arrs, a, b, num_perm, max_cells)
+        mins = _minhash_of(arrs, a, b, num_perm)
         # ndarray values: Arrow's fast path, no per-element int boxing
         return pd.DataFrame(
             {
@@ -392,115 +357,116 @@ def band_table(sigs: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:
 
 
 def candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig = CANONICAL, registry: list | None = None
+    bands: DataFrame,
+    cfg: DedupConfig = CANONICAL,
+    registry: list | None = None,
+    payload: tuple[str, ...] = (),
+    probes: DataFrame | None = None,
 ) -> DataFrame:
-    """Distinct candidate (url_a < url_b) pairs from band collisions.
+    """The one skew-bounded bucket self-join behind every band path: rows of
+    ``bands`` (url, band_idx, band_hash, *payload) sharing a bucket become
+    distinct candidate (url_a < url_b) pairs, each ``payload`` column carried
+    as ``<col>_a`` / ``<col>_b`` for the caller's verify step.
 
-    Buckets <= bucket_cap: all-pairs equi self-join (J2). Oversized buckets
-    (explicit skew cap, north rule) are SALTED into ceil(n/salt_sub_cap)
-    sub-buckets of ~salt_sub_cap members with all-pairs inside each salt,
-    PLUS linear star edges to the bucket minimum — work per hot bucket is
-    O(n * salt_sub_cap) instead of O(n^2). Buckets above star_only_cap emit
-    star edges ONLY (see config.star_only_cap). Recall: mutually-similar members that are NOT similar to the
-    bucket min keep their direct edge whenever they share a salt (and any
-    other band); the star edges keep whole-bucket connectivity through the
+    Three tiers by bucket size n (explicit skew cap, north rule):
+      * n <= bucket_cap: all-pairs equi self-join (J2);
+      * bucket_cap < n <= star_only_cap: linear star edges to the bucket
+        minimum PLUS all-pairs inside ceil(n/salt_sub_cap) salted
+        sub-buckets of ~salt_sub_cap members — O(n * salt_sub_cap) per
+        band instead of O(n^2);
+      * n > star_only_cap: star edges ONLY (see config.star_only_cap).
+    Recall: mutually-similar members that are NOT similar to the bucket min
+    keep their direct edge whenever they share a salt (and any other band);
+    the star edges keep whole-bucket connectivity through the
     representative. Residual loss — a similar pair whose EVERY shared band
     is hot and salted apart — is the documented trade vs the reference's
-    unbounded radius search (adversarial fixture: tests/test_minhash.py).
+    unbounded radius search (adversarial fixtures: tests/test_minhash.py,
+    tests/test_simhash.py).
 
-    ``registry=None`` (direct API calls): intermediates are unpersisted on
-    return — the returned lazy plan recomputes them per consumer action.
-    Pass a registry to keep them cached across consumers and unpersist when
-    done (the pipeline/_drained pattern); r4 ADVICE: the old behavior left
-    them cached for the session lifetime.
+    ``probes`` (incremental mode, J4/J5): the new documents' band rows,
+    joined against the whole ``bands`` index under the same tiers and salt,
+    so only pairs touching a probe are emitted and per-probe fan-out stays
+    bounded at bands * (bucket_cap + salt_sub_cap + 1) however large the
+    index grows. n is the bucket size AT PROBE TIME (it grows across
+    batches), so salted sub-bucket membership can differ from a one-shot
+    batch run (tests/test_incremental.py). A probe that is itself the
+    bucket min emits no star edges; no test pins that case yet.
+
+    ``registry``: the band table is cached ONCE, pre-partitioned on the
+    bucket key, and ONE barrier job materializes it and the bucket stats
+    (the stats aggregate is the cache's first consumer, so the lazy persist
+    fills en route); both frames go into the registry for the caller to
+    unpersist. ``registry=None`` returns a lazy plan and launches no job.
     """
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _candidate_pairs(bands, cfg, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig, registry: list
-) -> DataFrame:
-    # CACHE the band table ONCE, pre-partitioned on the bucket key:
-    # event-log profiling (tools/spark_stage_detail.py, 1M rows) caught the
-    # lazy band subtree re-reading the wide signature cache and re-writing
-    # its own ~340 MB exchange SIX times — once per downstream reference
-    # (stats agg, sized join, and the normal/hot splits) — because AQE does
-    # not reuse exchanges across separate DataFrame references. One
-    # repartition exchange at persist time makes the stats aggregation and
-    # every sized/normal/hot branch join exchange-free
-    # (HashPartitioning(band_idx, band_hash) satisfies each downstream
-    # distribution; only the salted hot-bucket join re-keys).
-    bands = bands.repartition("band_idx", "band_hash").persist()
+    keys = ["band_idx", "band_hash"]
+    cols = ["url", *payload]
+    # one repartition exchange makes the stats aggregation and every tier
+    # join exchange-free: HashPartitioning(keys) satisfies each downstream
+    # distribution (only the salted join re-keys). Cached, the exchange is
+    # written once, not once per downstream reference (~340 MB each in a
+    # 1M-row event log: AQE does not reuse exchanges across references).
+    bands = bands.repartition(*keys)
     if registry is not None:
+        bands = bands.persist()
         registry.append(bands)
     # bucket stats via hash aggregation (map-side partial combine), NOT a
-    # window: a window would shuffle+sort the full bands table, while the
-    # aggregate shuffles one compact row per distinct bucket and the filter
-    # drops the singleton buckets (the vast majority) before the join.
-    #
-    # ONE barrier job materializes bands AND stats (stats is the bands
-    # cache's first consumer, so the lazy persist fills en route — no racing
-    # consumers): the r5 shape spent three blocking jobs here (bands count,
-    # then a persisted `sized` copy of the whole joined band table, counted
-    # again). `sized` is now lazy — each branch streams the bands cache and
-    # hash-probes the small cached stats side, exchange-free and without a
-    # second band-table-sized block-store copy.
+    # window: one compact row per distinct bucket, singleton buckets (the
+    # vast majority) dropped before the join. The anchor's payload rides
+    # along (min_by), so star edges need no join back to the anchor row.
     stats = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
+        bands.groupBy(*keys)
+        .agg(
+            F.count("*").alias("bucket_n"),
+            F.min("url").alias("bucket_min"),
+            *[F.min_by(c, "url").alias(f"bucket_min_{c}") for c in payload],
+        )
         .filter(F.col("bucket_n") >= 2)
-    ).persist()
-    # barrier-vs-race, measured both ways (r6): skipping this count (and the
-    # pruned/rare barriers) wins ~0.2-0.4 s/query at sf0.1 where the barrier
-    # is pure job overhead, but LOSES at 200k docs (interleaved pipeline A/B
-    # min 16.1 eager vs 17.1 lazy) — the racing query stages duplicate real
-    # exchange bytes there. Barrier stays the default (the bench's larger
-    # corpora are the binding case); the env hook preserves the experiment.
-    import os as _os
-    if _os.environ.get("EUROPA_LAZY_STATS") != "1":
-        stats.count()
+    )
     if registry is not None:
+        stats = stats.persist()
         registry.append(stats)
-    sized = bands.join(stats, ["band_idx", "band_hash"])
-    normal = sized.filter(F.col("bucket_n") <= cfg.bucket_cap).select(
-        "band_idx", "band_hash", "url"
+        # barrier-vs-race, measured both ways (r6): racing the consumers
+        # wins ~0.2-0.4 s/query at sf0.1 but LOSES at 200k docs
+        # (interleaved pipeline A/B min 16.1 eager vs 17.1 lazy)
+        stats.count()
+    n = F.col("bucket_n")
+    salt = F.pmod(
+        F.xxhash64("url", *keys), F.ceil(n / F.lit(cfg.salt_sub_cap)).cast("int")
     )
-    a = normal.alias("a")
-    b = normal.alias("b")
-    normal_pairs = a.join(b, ["band_idx", "band_hash"]).filter(
-        F.col("a.url") < F.col("b.url")
-    ).select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
+    index = bands.join(stats, keys).withColumn("salt", salt)
+    if probes is None:
+        left, keep = index, F.col("url_a") < F.col("url_b")
+    else:
+        # either side of a probe pair may hold the smaller url
+        left = probes.join(stats, keys).withColumn("salt", salt)
+        keep = F.col("url_a") != F.col("url_b")
 
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(cfg.salt_sub_cap)).cast("int")
-    hot = sized.filter(F.col("bucket_n") > cfg.bucket_cap).select(
-        "band_idx", "band_hash", "url", "bucket_min", "bucket_n",
-        F.pmod(F.xxhash64("url", "band_idx", "band_hash"), n_salts).alias("salt"),
+    def tier(cond, on: list[str]) -> DataFrame:
+        a, b = (
+            df.filter(cond).select(*on, *[F.col(c).alias(f"{c}_{s}") for c in cols])
+            for df, s in ((left, "a"), (index, "b"))
+        )
+        return a.join(b, on).filter(keep).drop(*on)
+
+    star = left.filter((n > cfg.bucket_cap) & (F.col("url") != F.col("bucket_min"))).select(
+        F.col("bucket_min").alias("url_a"),
+        *[F.col(f"bucket_min_{c}").alias(f"{c}_a") for c in payload],
+        *[F.col(c).alias(f"{c}_b") for c in cols],
     )
-    # star edges for EVERY over-cap bucket (connectivity through the anchor)
-    hot_star = hot.filter(F.col("url") != F.col("bucket_min")).select(
-        F.col("bucket_min").alias("url_a"), F.col("url").alias("url_b")
+    salted = (n > cfg.bucket_cap) & (n <= cfg.star_only_cap)
+    pairs = (
+        tier(n <= cfg.bucket_cap, keys)
+        .unionByName(star)
+        .unionByName(tier(salted, [*keys, "salt"]))
     )
-    # salted sub-bucket all-pairs only BELOW star_only_cap: above it (mega
-    # buckets — web-scale boilerplate cliques) the salted work n*cap/2 per
-    # band dwarfs any recall it buys, and star edges alone already give full
-    # CLUSTER recall for a true near-dup clique (see config.star_only_cap)
-    salted = hot.filter(F.col("bucket_n") <= cfg.star_only_cap)
-    ha = salted.select("band_idx", "band_hash", "salt", "url").alias("ha")
-    hb = salted.select("band_idx", "band_hash", "salt", "url").alias("hb")
-    hot_salt_pairs = (
-        ha.join(hb, ["band_idx", "band_hash", "salt"])
-        .filter(F.col("ha.url") < F.col("hb.url"))
-        .select(F.col("ha.url").alias("url_a"), F.col("hb.url").alias("url_b"))
-    )
-    return normal_pairs.unionByName(hot_star).unionByName(hot_salt_pairs).distinct()
+    if probes is not None:
+        swap = F.col("url_a") > F.col("url_b")
+        pairs = pairs.select(*[
+            F.when(swap, F.col(f"{c}_{y}")).otherwise(F.col(f"{c}_{x}")).alias(f"{c}_{x}")
+            for x, y in (("a", "b"), ("b", "a"))
+            for c in cols
+        ])
+    return pairs.dropDuplicates(["url_a", "url_b"])
 
 
 def estimated_jaccard_col(mh_a, mh_b, num_perm: int):
@@ -635,20 +601,16 @@ def verify_pairs(
     """Exact-Jaccard confirmation of candidates (J3).
 
     ``sigs`` either carries a precomputed ``shingles`` column (incremental
-    resume path — JVM set algebra on the stored arrays), or carries
-    ``extracted`` text, in which case cfg.verify_strategy picks the data
-    movement:
-
-      * 'rehash' (default): candidate pairs join the pruned TEXT (the pair
-        table broadcast when hinted, so the first join is map-side) and one
-        vectorized kernel recomputes both shingle sets per pair, emitting
-        only the score. The text (~2.5-4.2 KB/doc on webtext) is NARROWER
-        than the ~5.6 KB/doc shingle-hash arrays derived from it, and
-        string pages shuffle far cheaper than BIGINT-array rows — the
-        arrays variant of this stage measured 0.326 scaling efficiency at
-        1M rows, below the 0.41 DRAM ceiling (r3 VERDICT #2).
-      * 'arrays': recompute shingle arrays for candidate urls via UDF, then
-        JVM array_intersect/array_union through both pair joins.
+    resume path — JVM array_intersect/array_union on the stored arrays), or
+    carries ``extracted`` text: candidate pairs then join the pruned TEXT
+    (the pair table broadcast when hinted, so the first join is map-side)
+    and one vectorized kernel recomputes both shingle sets per pair,
+    emitting only the score. The text (~2.5-4.2 KB/doc on webtext) is
+    NARROWER than the ~5.6 KB/doc shingle-hash arrays derived from it, and
+    string pages shuffle far cheaper than BIGINT-array rows — recomputing
+    arrays for candidate urls and joining them through both pair joins
+    measured 0.326 scaling efficiency at 1M rows, below the 0.41 DRAM
+    ceiling (r3 VERDICT #2), and was retired.
 
     Candidates are a small fraction of the corpus (LSH radius-search
     selectivity), so pruning BEFORE any recompute keeps wide data out of
@@ -679,15 +641,25 @@ def _verify_pairs(
     needed = candidates.select(
         F.explode(F.array("url_a", "url_b")).alias("url")
     ).distinct()
-    if "shingles" not in sigs.columns and cfg.verify_strategy == "rehash":
+    if "shingles" in sigs.columns:
+        sh = sigs.select("url", "shingles").join(
+            maybe_broadcast(needed, cfg), "url", "left_semi"
+        )
+        j = (
+            candidates.join(sh.withColumnRenamed("url", "url_a").withColumnRenamed("shingles", "sh_a"), "url_a")
+            .join(sh.withColumnRenamed("url", "url_b").withColumnRenamed("shingles", "sh_b"), "url_b")
+            .withColumn(
+                "score",
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")),
+            )
+        )
+    else:
         pruned = sigs.select("url", "extracted").join(
             maybe_broadcast(needed, cfg), "url", "left_semi"
         ).persist()
-        import os as _os
-        if _os.environ.get("EUROPA_LAZY_PRUNED") != "1":
-            pruned.count()  # both text joins consume this — don't race the scan
-        if registry is not None:
-            registry.append(pruned)
+        registry.append(pruned)
+        pruned.count()  # both text joins consume this — don't race the scan
         pj = make_pair_jaccard_udf(cfg)
         a = pruned.select(
             F.col("url").alias("url_a"), F.col("extracted").alias("text_a")
@@ -701,34 +673,6 @@ def _verify_pairs(
             .join(b, "url_b")
             .withColumn("score", pj(F.col("text_a"), F.col("text_b")))
         )
-        return (
-            j.filter(F.col("score") >= F.lit(cfg.jaccard_threshold))
-            .select("url_a", "url_b", F.lit("minhash").alias("method"), "score")
-        )
-    if "shingles" in sigs.columns:
-        sh = sigs.select(F.col("url"), F.col("shingles")).join(
-            maybe_broadcast(needed, cfg), "url", "left_semi"
-        )
-    else:
-        shingle_udf = make_shingle_udf(cfg)
-        pruned = sigs.select("url", "extracted").join(
-            maybe_broadcast(needed, cfg), "url", "left_semi"
-        )
-        sh = pruned.select(
-            "url", shingle_udf(F.col("extracted")).alias("shingles")
-        ).persist()
-        sh.count()  # both pair joins consume this — don't race the UDF
-        if registry is not None:
-            registry.append(sh)
-    j = (
-        candidates.join(sh.withColumnRenamed("url", "url_a").withColumnRenamed("shingles", "sh_a"), "url_a")
-        .join(sh.withColumnRenamed("url", "url_b").withColumnRenamed("shingles", "sh_b"), "url_b")
-        .withColumn(
-            "score",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-    )
     return (
         j.filter(F.col("score") >= F.lit(cfg.jaccard_threshold))
         .select("url_a", "url_b", F.lit("minhash").alias("method"), "score")
@@ -757,82 +701,10 @@ def incremental_minhash_pairs(
     new_sigs = with_signatures(new_reps, cfg).localCheckpoint()
     cols = ["url", "shingles", "minhash"]
     all_sigs = existing_sigs.select(*cols).unionByName(new_sigs.select(*cols))
-    probes = band_table(new_sigs, cfg)
-    index = band_table(all_sigs, cfg)
-    # index-side hot buckets are capped (same cap as the batch path): the
-    # index grows with the whole corpus, so an uncapped equi-join would let
-    # one degenerate bucket make per-batch fan-out corpus-proportional
-    # (r3 ADVICE #3). A probe landing in a hot bucket pairs with (a) the
-    # bucket min — the star anchor that keeps whole-bucket connectivity —
-    # and (b) the members of its own SALTED sub-bucket, mirroring the batch
-    # path's hot_salt_pairs (r4 ADVICE #1: star-only routing silently lost
-    # the direct edge to a non-anchor near-dup). Same salt formula as
-    # candidate_pairs, so a probe meets exactly the members it would share a
-    # salt with in a batch run over the accumulated corpus; per-probe
-    # fan-out stays bounded at bands * (cap + salt_sub_cap + 1). NOTE the residual batch/
-    # incremental delta on hot buckets: n_salts derives from the bucket size
-    # AT PROBE TIME, which grows across batches, so sub-bucket membership
-    # (not connectivity, and not the verified-pair threshold) can differ
-    # from a one-shot batch run — tests/test_incremental.py pins the salted
-    # semantics and the cluster-level equivalence.
-    stats = (
-        index.groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
-        .filter(F.col("bucket_n") >= 2)
-    )
-    sized = index.join(stats, ["band_idx", "band_hash"])
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(cfg.salt_sub_cap)).cast("int")
-    capped_index = (
-        sized.filter(F.col("bucket_n") <= cfg.bucket_cap)
-        .select("band_idx", "band_hash", "url")
-        .unionByName(
-            sized.filter(
-                (F.col("bucket_n") > cfg.bucket_cap)
-                & (F.col("url") == F.col("bucket_min"))
-            ).select("band_idx", "band_hash", "url")
-        )
-    )
-    plain_cands = (
-        probes.alias("a")
-        .join(capped_index.alias("b"), ["band_idx", "band_hash"])
-        .filter(F.col("a.url") != F.col("b.url"))
-        .select(F.col("a.url").alias("pa"), F.col("b.url").alias("pb"))
-    )
-    hot_index = sized.filter(
-        (F.col("bucket_n") > cfg.bucket_cap)
-        & (F.col("bucket_n") <= cfg.star_only_cap)
-    ).select(
-        "band_idx", "band_hash", "url",
-        F.pmod(F.xxhash64("url", "band_idx", "band_hash"), n_salts).alias("salt"),
-    )
-    hot_probes = (
-        probes.join(
-            stats.filter(
-                (F.col("bucket_n") > cfg.bucket_cap)
-                & (F.col("bucket_n") <= cfg.star_only_cap)
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .select(
-            "band_idx", "band_hash", "url",
-            F.pmod(
-                F.xxhash64("url", "band_idx", "band_hash"), n_salts
-            ).alias("salt"),
-        )
-    )
-    salt_cands = (
-        hot_probes.alias("a")
-        .join(hot_index.alias("b"), ["band_idx", "band_hash", "salt"])
-        .filter(F.col("a.url") != F.col("b.url"))
-        .select(F.col("a.url").alias("pa"), F.col("b.url").alias("pb"))
-    )
-    cands = (
-        plain_cands.unionByName(salt_cands)
-        .select(
-            F.least("pa", "pb").alias("url_a"),
-            F.greatest("pa", "pb").alias("url_b"),
-        )
-        .distinct()
+    # the index grows with the whole corpus: its hot buckets are capped
+    # exactly like the batch path's (r3 ADVICE #3)
+    cands = candidate_pairs(
+        band_table(all_sigs, cfg), cfg, probes=band_table(new_sigs, cfg)
     )
     if existing_pairs is not None:
         # already-done exclusion (the MatchExcept anti-join, J4)
@@ -870,7 +742,7 @@ def minhash_pairs(
     ``registry``: optional list collecting every DataFrame persisted here so
     the caller can unpersist them when done (pipeline.run's release()).
     With ``registry=None`` the intermediates are unpersisted on return and
-    the lazy result recomputes them per consumer (see candidate_pairs)."""
+    the lazy result recomputes them per consumer."""
     own = registry is None
     if own:
         registry = []

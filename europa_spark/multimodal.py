@@ -45,7 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import DedupConfig
+from .config import CANONICAL, DedupConfig
+from .minhash import candidate_pairs
 from .simhash import simhash_pairs
 
 
@@ -348,7 +349,8 @@ def media_phash_pairs(sigs: DataFrame, hamming_d: int = 10) -> DataFrame:
     """Perceptual near-duplicate pairs within a pHash Hamming radius — the
     SimilarImageFinder radius search (SimilarImageFinder.cs:280-330) over the
     64-bit signature, reusing the pigeonhole band machinery from the SimHash
-    path (guaranteed recall for bands >= d+1, same hot-bucket handling).
+    path (guaranteed recall for bands >= d+1; hot buckets go through
+    minhash.candidate_pairs like every band join).
 
     ``sigs`` is the media_signatures output; returns (url_a, url_b, method,
     score) with score = (64 - hamming) / 64.
@@ -386,7 +388,7 @@ def media_blockmean_pairs(
     sigs: DataFrame,
     hamming_d: int = 16,
     n_bands: int = 17,
-    bucket_cap: int = 2000,
+    cfg: DedupConfig = CANONICAL,
 ) -> DataFrame:
     """Near-duplicate pairs within a block-mean-961 Hamming radius — the
     reference's THIRD similarity mode certified end-to-end (BlockMeanHash.cs:
@@ -398,11 +400,10 @@ def media_blockmean_pairs(
     BYTE-ALIGNED substring bands (2 x 8 bytes + 15 x 7 at the default) —
     a differing BIT lives in exactly one byte hence at most one band, so
     pairs within Hamming d touch <= d bands and collide on >= 1 of d+1
-    (pigeonhole-complete recall for d <= n_bands - 1). Band buckets above
-    ``bucket_cap`` route to star edges (bucket min) + salted sub-bucket
-    all-pairs (same skew story as every other band join — minhash.
-    candidate_pairs has the recall argument); sub-cap buckets keep the full
-    equi-join.
+    (pigeonhole-complete recall for d <= n_bands - 1). The band buckets go
+    through minhash.candidate_pairs, the one skew-bounded bucket join
+    (cfg.bucket_cap / salt_sub_cap / star_only_cap tiers; its docstring has
+    the recall argument).
     Verify: exact Hamming over 31 packed BIGINT words (bit_count(xor),
     whole-stage codegen). score = (961 - hamming) / 961.
 
@@ -412,7 +413,6 @@ def media_blockmean_pairs(
     """
     if hamming_d > n_bands - 1:
         raise ValueError("pigeonhole recall needs n_bands >= hamming_d + 1")
-    base = sigs.select("url", "blockmean")
     # byte-aligned hex spans: 121 bytes over n_bands near-equal chunks
     per = 121 // n_bands
     extra = 121 - per * n_bands
@@ -422,62 +422,14 @@ def media_blockmean_pairs(
         spans.append((pos * 2 + 1, ln * 2))
         pos += ln
     bands = F.array(*[F.substring("blockmean", s, ln) for s, ln in spans])
-    bt = base.select(
-        "url", "blockmean", F.posexplode(bands).alias("band_idx", "band_key")
+    bt = sigs.select(
+        "url", "blockmean", F.posexplode(bands).alias("band_idx", "band_hash")
     )
-    stats = (
-        bt.groupBy("band_idx", "band_key")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
-        .filter(F.col("bucket_n") >= 2)
-    )
-    sized = bt.join(stats, ["band_idx", "band_key"])
-    normal = sized.filter(F.col("bucket_n") <= bucket_cap).select(
-        "band_idx", "band_key", "url", "blockmean"
-    )
-    a, b = normal.alias("a"), normal.alias("b")
-    cand_normal = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("a.url") < F.col("b.url"))
-        .select(
-            F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"),
-            F.col("a.blockmean").alias("bm_a"), F.col("b.blockmean").alias("bm_b"),
-        )
-    )
-    hot = sized.filter(F.col("bucket_n") > bucket_cap)
-    anchor = hot.filter(F.col("url") == F.col("bucket_min")).select(
-        "band_idx", "band_key",
-        F.col("url").alias("min_url"), F.col("blockmean").alias("min_bm"),
-    )
-    cand_star = (
-        hot.filter(F.col("url") != F.col("bucket_min"))
-        .join(anchor, ["band_idx", "band_key"])
-        .select(
-            F.col("min_url").alias("url_a"), F.col("url").alias("url_b"),
-            F.col("min_bm").alias("bm_a"), F.col("blockmean").alias("bm_b"),
-        )
-    )
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(bucket_cap)).cast("int")
-    salted = hot.select(
-        "band_idx", "band_key", "url", "blockmean",
-        F.pmod(F.xxhash64("url", "band_idx", "band_key"), n_salts).alias("salt"),
-    )
-    sa, sb = salted.alias("sa"), salted.alias("sb")
-    cand_salt = (
-        sa.join(sb, ["band_idx", "band_key", "salt"])
-        .filter(F.col("sa.url") < F.col("sb.url"))
-        .select(
-            F.col("sa.url").alias("url_a"), F.col("sb.url").alias("url_b"),
-            F.col("sa.blockmean").alias("bm_a"), F.col("sb.blockmean").alias("bm_b"),
-        )
-    )
-    cands = (
-        cand_normal.unionByName(cand_star).unionByName(cand_salt)
-        .dropDuplicates(["url_a", "url_b"])
-    )
+    cands = candidate_pairs(bt, cfg, payload=("blockmean",))
     hamming = F.aggregate(
         F.zip_with(
-            _blockmean_words(F.col("bm_a")),
-            _blockmean_words(F.col("bm_b")),
+            _blockmean_words(F.col("blockmean_a")),
+            _blockmean_words(F.col("blockmean_b")),
             lambda x, y: F.bit_count(x.bitwiseXOR(y)),
         ),
         F.lit(0),

@@ -2,14 +2,9 @@
 (NotificationHub.cs:1-4; SendProgress at DuplicateByHashFinder.cs:146-171).
 
 The reference pushes (stage, processed-count) events DURING the run. On
-Spark the equivalent live signals are:
-
-  * pipeline-stage events emitted by ``pipeline.run`` as each stage's action
-    completes (stage name, wall ms, optional row count) — works with or
-    without a CheckpointStore;
-  * an optional background sampler polling
-    ``SparkContext.statusTracker()`` for active-stage / task counts while a
-    job runs (the task-level progress feed).
+Spark the equivalent live signal is the pipeline-stage events emitted by
+``pipeline.run`` as each stage's action completes (stage name, wall ms,
+optional row count) — with or without a CheckpointStore.
 
 Events are appended to an in-memory list and optionally streamed to a
 callback; ``CheckpointStore.save`` additionally persists them (checkpoint.py
@@ -19,7 +14,6 @@ stream (VERDICT r01 gap S5).
 
 from __future__ import annotations
 
-import threading
 import time
 from dataclasses import dataclass, field
 from typing import Callable
@@ -28,11 +22,10 @@ from typing import Callable
 @dataclass
 class ProgressEvent:
     stage: str
-    kind: str            # "begin" | "end" | "tasks"
+    kind: str            # "begin" | "end"
     t: float             # unix seconds
     wall_ms: int | None = None
     rows: int | None = None
-    active_tasks: int | None = None
 
 
 @dataclass
@@ -67,44 +60,3 @@ class ProgressTracker:
             e.stage: e.wall_ms for e in self.events
             if e.kind == "end" and e.wall_ms is not None
         }
-
-
-class TaskSampler:
-    """Background thread sampling SparkContext.statusTracker() — live
-    task-level progress while jobs run (use as a context manager)."""
-
-    def __init__(self, sc, tracker: ProgressTracker, interval: float = 0.5):
-        self._sc = sc
-        self._tracker = tracker
-        self._interval = interval
-        self._stop = threading.Event()
-        self._thread: threading.Thread | None = None
-
-    def _loop(self) -> None:
-        st = self._sc.statusTracker()
-        while not self._stop.wait(self._interval):
-            try:
-                stage_ids = st.getActiveStageIds()
-                active = 0
-                for sid in stage_ids:
-                    info = st.getStageInfo(sid)
-                    if info is not None:
-                        active += info.numActiveTasks
-                self._tracker.emit(
-                    ProgressEvent(
-                        stage=f"spark_stages:{list(stage_ids)}",
-                        kind="tasks", t=time.time(), active_tasks=active,
-                    )
-                )
-            except Exception:  # noqa: BLE001 — sampler must never kill the job
-                return
-
-    def __enter__(self) -> "TaskSampler":
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)

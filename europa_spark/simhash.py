@@ -12,6 +12,8 @@ candidate generation is a pigeonhole band equi-join — split 64 bits into
 ``simhash_bands`` disjoint 16-bit keys; any pair within Hamming d collides
 on >= 1 band when bands >= d+1 (guaranteed recall, unlike probabilistic
 LSH); verification is ``bit_count(a ^ b) <= d``, whole-stage-codegen'd.
+The band buckets go through minhash.candidate_pairs, the one skew-bounded
+bucket join (hot buckets salted + star-routed, mega buckets star-only).
 
 This path is NOT in the default cluster pipeline (it finds bit-level-similar
 pairs the Jaccard truth tables don't plant); it is the configurable fuzzy
@@ -28,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from .config import DedupConfig, CANONICAL
-from .minhash import _token_hash
+from .minhash import _token_hash, candidate_pairs
 
 _U64 = np.uint64
 _BIGRAM_MIX = _U64(0xC2B2AE3D27D4EB4F)
@@ -113,10 +115,14 @@ def _batch_simhash(texts: list[str], token_hash=_token_hash) -> np.ndarray:
     starts_all = np.zeros(len(lens_all), dtype=np.int64)
     np.cumsum(lens_all[:-1], out=starts_all[1:])
     n_rows = len(lens_all)
+    # rows per chunk are capped too: _segment_bit_counts bins n_rows * 256
+    # counters per byte lane, so a chunk of many one-token docs would
+    # otherwise grow that array far past the cache-sized token buffers
+    max_rows = max(1, _CHUNK_TOKENS // 256)
     i = 0
     while i < n_rows:
         j, toks = i, 0
-        while j < n_rows and (
+        while j < n_rows and j - i < max_rows and (
             toks == 0 or toks + int(lens_all[j]) <= _CHUNK_TOKENS
         ):
             toks += int(lens_all[j])
@@ -190,6 +196,37 @@ def _band_cols(cfg: DedupConfig):
     )
 
 
+def _band_table(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(url, simhash, band_idx, band_hash): one pigeonhole band per row."""
+    return sigs.select(
+        "url", "simhash", F.posexplode(_band_cols(cfg)).alias("band_idx", "band_hash")
+    )
+
+
+def _bucket_pairs(
+    bands: DataFrame,
+    cfg: DedupConfig,
+    registry: list | None = None,
+    probes: DataFrame | None = None,
+) -> DataFrame:
+    """Band-bucket candidates (minhash.candidate_pairs: the shared
+    three-tier skew routing — degenerate signatures, e.g. near-empty docs
+    all hashing to 0, would otherwise explode) verified by exact Hamming
+    ``bit_count(a ^ b) <= d``. score = (64 - hamming) / 64."""
+    cands = candidate_pairs(bands, cfg, registry, payload=("simhash",), probes=probes)
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return (
+        cands.withColumn("hamming", hamming)
+        .filter(F.col("hamming") <= cfg.simhash_hamming_d)
+        .select(
+            "url_a",
+            "url_b",
+            F.lit("simhash").alias("method"),
+            ((F.lit(64) - F.col("hamming")) / F.lit(64)).alias("score"),
+        )
+    )
+
+
 def incremental_simhash_pairs(
     existing_sigs: DataFrame,
     new_reps: DataFrame,
@@ -205,89 +242,13 @@ def incremental_simhash_pairs(
     Returns (new_sigs(url, simhash), new_pairs) — new_pairs touches at
     least one new doc. Skew note: the probe side is one batch (small), but
     the INDEX side grows with the whole corpus — a degenerate hot bucket
-    (e.g. near-empty docs all hashing to simhash 0) would make per-batch
-    join fan-out scale with total corpus size (r3 ADVICE #3). Index buckets
-    above cfg.bucket_cap are therefore capped exactly like the batch path:
-    a probe landing in a hot bucket pairs with the bucket's min url (the
-    star anchor — whole-bucket connectivity) PLUS the members of its salted
-    sub-bucket (r4 ADVICE #1: star-only routing silently lost the direct
-    edge to a non-anchor near-dup; same salt formula as the batch
-    hot_salt_pairs), while sub-cap buckets keep the full equi-join.
-    Per-probe fan-out stays bounded at bands * (cap + salt_sub_cap + 1). n_salts derives
-    from the bucket size at probe time (grows across batches), so salted
-    sub-bucket membership can differ from a one-shot batch run — pinned in
-    tests/test_incremental.py."""
+    would make per-batch join fan-out scale with total corpus size (r3
+    ADVICE #3), so the index buckets go through the same capped tiers as
+    the batch path (minhash.candidate_pairs, probe mode)."""
     new_sigs = with_simhash(new_reps, cfg).select("url", "simhash").localCheckpoint()
     all_sigs = existing_sigs.select("url", "simhash").unionByName(new_sigs)
-    bands = _band_cols(cfg)
-    probes = new_sigs.select(
-        "url", "simhash", F.posexplode(bands).alias("band_idx", "band_key")
-    )
-    index = all_sigs.select(
-        "url", "simhash", F.posexplode(bands).alias("band_idx", "band_key")
-    )
-    stats = (
-        index.groupBy("band_idx", "band_key")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
-        .filter(F.col("bucket_n") >= 2)
-    )
-    sized = index.join(stats, ["band_idx", "band_key"])
-    normal_idx = sized.filter(F.col("bucket_n") <= cfg.bucket_cap).select(
-        "band_idx", "band_key", "url", "simhash"
-    )
-    hot_min = sized.filter(
-        (F.col("bucket_n") > cfg.bucket_cap) & (F.col("url") == F.col("bucket_min"))
-    ).select("band_idx", "band_key", "url", "simhash")
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(cfg.salt_sub_cap)).cast("int")
-    salt_col = F.pmod(
-        F.xxhash64("url", "band_idx", "band_key"), n_salts
-    ).alias("salt")
-    in_salt_range = (F.col("bucket_n") > cfg.bucket_cap) & (
-        F.col("bucket_n") <= cfg.star_only_cap
-    )
-    hot_index = sized.filter(in_salt_range).select(
-        "band_idx", "band_key", "url", "simhash", salt_col
-    )
-    hot_probes = probes.join(
-        stats.filter(in_salt_range), ["band_idx", "band_key"]
-    ).select("band_idx", "band_key", "url", "simhash", salt_col)
-    plain = (
-        probes.alias("a")
-        .join(normal_idx.unionByName(hot_min).alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.url") != F.col("b.url"))
-        .select(
-            F.col("a.url").alias("pa"), F.col("b.url").alias("pb"),
-            F.col("a.simhash").alias("ha"), F.col("b.simhash").alias("hb"),
-        )
-    )
-    salted = (
-        hot_probes.alias("a")
-        .join(hot_index.alias("b"), ["band_idx", "band_key", "salt"])
-        .filter(F.col("a.url") != F.col("b.url"))
-        .select(
-            F.col("a.url").alias("pa"), F.col("b.url").alias("pb"),
-            F.col("a.simhash").alias("ha"), F.col("b.simhash").alias("hb"),
-        )
-    )
-    cands = (
-        plain.unionByName(salted)
-        .select(
-            F.least("pa", "pb").alias("url_a"),
-            F.greatest("pa", "pb").alias("url_b"),
-            F.least("ha", "hb").alias("s1"),
-            F.greatest("ha", "hb").alias("s2"),
-        )
-        .dropDuplicates(["url_a", "url_b"])
-    )
-    hamming = F.bit_count(F.expr("s1 ^ s2"))
-    pairs = (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= cfg.simhash_hamming_d)
-        .select(
-            "url_a", "url_b",
-            F.lit("simhash").alias("method"),
-            ((F.lit(64) - F.col("hamming")) / F.lit(64)).alias("score"),
-        )
+    pairs = _bucket_pairs(
+        _band_table(all_sigs, cfg), cfg, probes=_band_table(new_sigs, cfg)
     )
     if existing_pairs is not None:
         pairs = pairs.join(
@@ -307,128 +268,11 @@ def simhash_pairs(
     score = (64 - hamming) / 64; the reference's dot score is recoverable as
     64 - 2*hamming (QdrantRepository.cs:240-247).
 
-    ``registry=None``: intermediates unpersist on return (recompute per
-    consumer); pass a registry to cache across consumers (see
+    ``registry``: the band table and bucket stats are cached (one barrier
+    job, the signature UDF runs once inside it) and registered for the
+    caller to unpersist; ``registry=None`` returns a lazy plan (see
     minhash.candidate_pairs).
     """
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _simhash_pairs(reps, cfg, sigs, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _simhash_pairs(
-    reps: DataFrame | None,
-    cfg: DedupConfig,
-    sigs: DataFrame | None,
-    registry: list,
-) -> DataFrame:
     if sigs is None:
-        # shared by the band table and both hot/normal branches — persist so
-        # the scan+UDF subtree is computed once (see minhash_pairs note)
-        sigs = with_simhash(reps, cfg).select("url", "simhash").persist()
-        # eager: band table + stats join + both branches reference this in
-        # one job (see minhash_pairs note on racing consumers)
-        sigs.count()
-        if registry is not None:
-            registry.append(sigs)
-    else:
-        sigs = sigs.select("url", "simhash")
-    nb = cfg.simhash_bands
-    width = 64 // nb
-    mask = (1 << width) - 1
-    bands = F.array(
-        *[
-            F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))
-            for i in range(nb)
-        ]
-    )
-    bt = sigs.select("url", "simhash", F.posexplode(bands).alias("band_idx", "band_key"))
-
-    # same hot-bucket star routing as the MinHash path (degenerate signatures
-    # — e.g. near-empty docs hashing to 0 — would otherwise explode).
-    # Bucket stats via hash aggregation instead of a window: no full-table
-    # sort, singleton buckets dropped before the join (see minhash.py).
-    stats = (
-        bt.groupBy("band_idx", "band_key")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
-        .filter(F.col("bucket_n") >= 2)
-    )
-    sized = bt.join(stats, ["band_idx", "band_key"])
-    normal = sized.filter(F.col("bucket_n") <= cfg.bucket_cap).select(
-        "band_idx", "band_key", "url", "simhash"
-    )
-    a, b = normal.alias("a"), normal.alias("b")
-    cand_normal = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("a.url") < F.col("b.url"))
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("b.url").alias("url_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-    )
-    # hot buckets: salted sub-buckets of ~cap members (all-pairs within a
-    # salt) + star edges to the bucket min — same recall/connectivity trade
-    # as minhash.candidate_pairs (see that docstring). Mega buckets (above
-    # cfg.star_only_cap) keep the star edges but skip the salted pairs —
-    # the n*cap/2-per-band work bound (see config.star_only_cap).
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(cfg.salt_sub_cap)).cast("int")
-    hot = sized.filter(F.col("bucket_n") > cfg.bucket_cap).select(
-        "band_idx", "band_key", "url", "simhash", "bucket_min", "bucket_n",
-        F.pmod(F.xxhash64("url", "band_idx", "band_key"), n_salts).alias("salt"),
-    )
-    hot_min = hot.select("band_idx", "band_key", "url", "simhash").alias("hm")
-    cand_star = (
-        hot.filter(F.col("url") != F.col("bucket_min"))
-        .alias("h")
-        .join(
-            hot_min,
-            (F.col("h.band_idx") == F.col("hm.band_idx"))
-            & (F.col("h.band_key") == F.col("hm.band_key"))
-            & (F.col("hm.url") == F.col("h.bucket_min")),
-        )
-        .select(
-            F.col("h.bucket_min").alias("url_a"),
-            F.col("h.url").alias("url_b"),
-            F.col("hm.simhash").alias("sig_a"),
-            F.col("h.simhash").alias("sig_b"),
-        )
-    )
-    salted_side = hot.filter(F.col("bucket_n") <= cfg.star_only_cap)
-    ha = salted_side.select(
-        "band_idx", "band_key", "salt", "url", "simhash"
-    ).alias("sa")
-    hb = salted_side.select(
-        "band_idx", "band_key", "salt", "url", "simhash"
-    ).alias("sb")
-    cand_salt = (
-        ha.join(hb, ["band_idx", "band_key", "salt"])
-        .filter(F.col("sa.url") < F.col("sb.url"))
-        .select(
-            F.col("sa.url").alias("url_a"),
-            F.col("sb.url").alias("url_b"),
-            F.col("sa.simhash").alias("sig_a"),
-            F.col("sb.simhash").alias("sig_b"),
-        )
-    )
-    cands = cand_normal.unionByName(cand_star).unionByName(cand_salt).dropDuplicates(
-        ["url_a", "url_b"]
-    )
-    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= cfg.simhash_hamming_d)
-        .select(
-            "url_a",
-            "url_b",
-            F.lit("simhash").alias("method"),
-            ((F.lit(64) - F.col("hamming")) / F.lit(64)).alias("score"),
-        )
-    )
+        sigs = with_simhash(reps, cfg)
+    return _bucket_pairs(_band_table(sigs, cfg), cfg, registry)

@@ -86,6 +86,65 @@ def test_batch_simhash_equal_per_row(texts, use_fnv, tiny_chunks):
         assert got == sh._simhash_np(t, cache, token_hash), t
 
 
+def test_batch_simhash_many_single_token_docs(monkeypatch):
+    """A chunk of thousands of one-token docs fits the token budget, so only
+    the row cap keeps the per-lane bincount (n_rows * 256 bins) cache-sized;
+    the row-capped chunks must stay bit-identical to the per-row kernel."""
+    import europa_spark.simhash as sh
+
+    rows_seen = []
+    counts = sh._segment_bit_counts
+
+    def spy(vals, seg256, n_rows):
+        rows_seen.append(n_rows)
+        return counts(vals, seg256, n_rows)
+
+    monkeypatch.setattr(sh, "_segment_bit_counts", spy)
+    texts = [f"t{i % 97}" for i in range(5000)] + ["", "a b", "c"]
+    batch = sh._batch_simhash(texts)
+    assert max(rows_seen) * 256 <= sh._CHUNK_TOKENS
+    cache: dict = {}
+    assert [int(x) for x in batch] == [sh._simhash_np(t, cache) for t in texts]
+
+
+def test_power_tables_grow_atomically():
+    """Threads growing and reading the shared winnow power tables at once:
+    every _powers(n) call must return an (inv, base) pair of equal length
+    >= n — a torn swap pairs a grown table with a stale shorter one."""
+    import sys
+    import threading
+
+    import europa_spark.substring as ss
+
+    bad: list = []
+
+    def worker(seed: int) -> None:
+        try:
+            for i in range(200):
+                n = 1 + (seed * 7919 + i * 104_729) % (4 * ss._CHUNK_CHARS)
+                inv, pb = ss._powers(n)
+                if not (len(inv) == len(pb) >= n):
+                    bad.append(n)
+        except Exception as e:  # noqa: BLE001 — a thread's error must fail the test
+            bad.append(repr(e))
+
+    saved, interval = ss._POW_TABLES, sys.getswitchinterval()
+    try:
+        sys.setswitchinterval(1e-6)
+        for _ in range(5):
+            ss._POW_TABLES = (np.array([1], dtype=np.uint64),) * 2
+            threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+        ss._POW_TABLES = saved
+    assert not bad, bad[:5]
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.text(alphabet="abc ", min_size=200, max_size=400), st.integers(0, 150))
 def test_winnow_guarantee(doc, offset):

@@ -148,20 +148,19 @@ def test_band_join_is_narrow(spark, sigs):
 
 
 def test_verify_strategy_and_margin_equivalence(spark, reps):
-    """r4 ADVICE #2: the three verify configurations must confirm the
-    IDENTICAL (url_a, url_b, score) set on the planted corpus —
-    'rehash' (default), 'arrays' (the pre-r4 default path), and the
-    est_prefilter margin (which must drop nothing at the canonical
-    config: P(false drop) ~ 1e-5 per true pair)."""
+    """r4 ADVICE #2: the verify configurations must confirm the IDENTICAL
+    (url_a, url_b, score) set on the planted corpus — text rehash (default),
+    JVM set algebra on stored shingle arrays (the incremental path's verify,
+    fed by with_signatures), and the est_prefilter margin (which must drop
+    nothing at the canonical config: P(false drop) ~ 1e-5 per true pair)."""
     base = {
         (r["url_a"], r["url_b"], r["score"])
         for r in minhash_pairs(reps).collect()
     }
     assert base, "planted corpus must yield pairs"
-    arrays_cfg = DedupConfig(verify_strategy="arrays")
     got_arrays = {
         (r["url_a"], r["url_b"], r["score"])
-        for r in minhash_pairs(reps, arrays_cfg).collect()
+        for r in minhash_pairs(reps, sigs=with_signatures(reps)).collect()
     }
     assert got_arrays == base
     margin_cfg = DedupConfig(verify_est_margin=0.15)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from europa_spark.config import DedupConfig
 from europa_spark.simhash import _simhash_np, simhash_pairs, with_simhash
 
@@ -99,3 +101,44 @@ def test_fnv_simhash_banded_pairs_equal_bruteforce(spark, docs_df):
         for r in simhash_pairs(reps, cfg).collect()
     }
     assert got == brute
+
+
+@pytest.mark.parametrize("tier", ["hot", "mega"])
+@pytest.mark.parametrize("path", ["simhash", "blockmean"])
+def test_band_join_skew_tiers(spark, path, tier):
+    """Batch simhash and media block-mean band joins inherit the three-tier
+    skew bound: n identical signatures fill one bucket per band, every
+    candidate verifies (Hamming 0), so the confirmed pairs ARE the
+    candidates. A hot bucket yields star edges to the min plus salted
+    sub-bucket pairs; a mega bucket (> star_only_cap) star edges only; and
+    per-band work stays within n * salt_sub_cap."""
+    n = 60
+    # bucket_cap > salt_sub_cap: sub-buckets sized by bucket_cap (~n/2 * 9
+    # pairs here) would break the n * salt_sub_cap bound below
+    cfg = DedupConfig(
+        bucket_cap=10, salt_sub_cap=3, star_only_cap=n if tier == "hot" else n - 1
+    )
+    urls = [f"u{i:02d}" for i in range(n)]
+    if path == "simhash":
+        sigs = spark.createDataFrame(
+            [(u, 0x5A5A_1234_F00D_0042) for u in urls], "url string, simhash bigint"
+        )
+        got = simhash_pairs(None, cfg, sigs=sigs)
+        n_bands = cfg.simhash_bands  # identical signatures: every band collides
+    else:
+        from europa_spark.multimodal import media_blockmean_pairs
+
+        sigs = spark.createDataFrame(
+            [(u, "a5" * 121) for u in urls], "url string, blockmean string"
+        )
+        # one band of the whole hash: the output IS the per-band candidate set
+        got = media_blockmean_pairs(sigs, hamming_d=0, n_bands=1, cfg=cfg)
+        n_bands = 1
+    rows = {(r["url_a"], r["url_b"]) for r in got.collect()}
+    star = {(urls[0], u) for u in urls[1:]}
+    assert star <= rows
+    if tier == "hot":
+        assert rows - star, "salted sub-buckets must emit member-member pairs"
+    else:
+        assert rows == star
+    assert len(rows) <= n_bands * n * cfg.salt_sub_cap
