@@ -5,8 +5,8 @@ NOT the driver bench — bench.py is frozen. This script:
     a lazy frame; the checkpointing queries time the materialization as
     bench.py does),
   * captures .explain("formatted") for each query into plans/<tag>/,
-  * optionally runs the full pipeline with EUROPA_STAGE_TIMING=1 for a
-    stage-level breakdown.
+  * optionally runs the full pipeline with a ProgressTracker that prints
+    one ``STAGE <name>: <s>s`` line per stage for a stage-level breakdown.
 
 Usage:
   python bench_extra.py plans <tag>          # explain dumps for all queries
@@ -91,6 +91,7 @@ def cmd_plans_detail(tag: str) -> None:
     from europa_spark.extract import split_quarantine, with_extracted
     from europa_spark.minhash import minhash_pairs
     from europa_spark.pipeline import run
+    from europa_spark.scope import Scope
     from europa_spark.simhash import simhash_pairs
     from europa_spark.substring import substring_pairs
 
@@ -107,22 +108,20 @@ def cmd_plans_detail(tag: str) -> None:
         "exact_clusters": exact_clusters(exact_membership(clean)),
     }
     reps = representatives(hashed).select("url", "extracted")
-    reg: list = []
-    frames["minhash_confirmed"] = minhash_pairs(reps, registry=reg)
-    frames["simhash_confirmed"] = simhash_pairs(reps, registry=reg)
-    frames["substring_confirmed"] = substring_pairs(reps, registry=reg)
-    out = run(docs)
-    frames["pipeline_pairs"] = out["pairs"]
-    frames["pipeline_components"] = out["components"]
-    frames["pipeline_report"] = out["report"]
-    frames["pipeline_clusters"] = out["clusters"]
-    for name, df in frames.items():
-        with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-            f.write(_explain(df))
-        print(f"wrote {outdir}/{name}.txt")
-    out["release"]()
-    for f in reg:
-        f.unpersist()
+    with Scope() as scope:
+        frames["minhash_confirmed"] = minhash_pairs(reps, registry=scope)
+        frames["simhash_confirmed"] = simhash_pairs(reps, registry=scope)
+        frames["substring_confirmed"] = substring_pairs(reps, registry=scope)
+        out = run(docs)
+        frames["pipeline_pairs"] = out["pairs"]
+        frames["pipeline_components"] = out["components"]
+        frames["pipeline_report"] = out["report"]
+        frames["pipeline_clusters"] = out["clusters"]
+        for name, df in frames.items():
+            with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
+                f.write(_explain(df))
+            print(f"wrote {outdir}/{name}.txt")
+        out["release"]()
     spark.stop()
 
 
@@ -148,10 +147,16 @@ def cmd_time(names: list[str]) -> None:
     spark.stop()
 
 
+def _print_stage(ev) -> None:
+    if ev.kind == "end":
+        print(f"STAGE {ev.stage}: {ev.wall_ms / 1000:.2f}s",
+              file=sys.stderr, flush=True)
+
+
 def cmd_stages(corpus: bool) -> None:
-    os.environ["EUROPA_STAGE_TIMING"] = "1"
-    from europa_spark.pipeline import run
     from europa_spark.adapters import load_canonical
+    from europa_spark.pipeline import run
+    from europa_spark.progress import ProgressTracker
 
     spark = _session()
     reps = int(os.environ.get("EUROPA_EXTRA_REPS", "2"))
@@ -165,7 +170,7 @@ def cmd_stages(corpus: bool) -> None:
         else:
             docs = load_canonical(spark, SF_DIR)
         t0 = time.time()
-        out = run(docs)
+        out = run(docs, tracker=ProgressTracker(on_event=_print_stage))
         out["report"].count()
         out["clusters"].count()
         print(f"WALL rep{i}: {time.time()-t0:.2f}s", file=sys.stderr, flush=True)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scope import Scope
+
 
 def connected_components(
     pairs: DataFrame,
@@ -79,71 +81,26 @@ def connected_components(
     # action that materializes them — a star-forest graph (webtext: exact
     # groups + hot-bucket star routing emit anchor->member edges whose init
     # labels are already final) converges in a single job instead of 3-5.
-    if n_edges_hint is not None:
-        # non-eager: round 0's convergence count materializes the
-        # repartition while it truncates the lineage
-        adj, adj_ids = _tracked_local_checkpoint(
-            adj.repartition(_loop_parts(2 * n_edges_hint), "url_b"),
-            eager=False,
-        )
-    else:
-        adj, adj_ids = _tracked_local_checkpoint(adj)
-        n_adj = adj.count()  # cheap: materialized by the checkpoint above
-        loop_parts = _loop_parts(n_adj)
-        if adj.rdd.getNumPartitions() != loop_parts:
-            repart, new_ids = _tracked_local_checkpoint(
-                adj.repartition(loop_parts, "url_b")
+    with Scope() as held:
+        if n_edges_hint is not None:
+            # non-eager: round 0's convergence count materializes the
+            # repartition while it truncates the lineage
+            adj = held.truncate(
+                adj.repartition(_loop_parts(2 * n_edges_hint), "url_b"),
+                eager=False,
             )
-            repart.count()
-            _unpersist_ids(pairs.sparkSession, adj_ids)
-            adj, adj_ids = repart, new_ids
-    try:
-        return _cc_loop(adj, max_iter)
-    finally:
+        else:
+            adj = held.truncate(adj)
+            n_adj = adj.count()  # cheap: materialized by the checkpoint above
+            loop_parts = _loop_parts(n_adj)
+            if adj.rdd.getNumPartitions() != loop_parts:
+                # the unsized copy is freed once the sized one is stored
+                with Scope() as unsized:
+                    unsized.append(held.pop())
+                    adj = held.truncate(adj.repartition(loop_parts, "url_b"))
         # the final labels are checkpointed, so the adjacency is dead weight
         # the moment the loop returns
-        _unpersist_ids(pairs.sparkSession, adj_ids)
-
-
-_CKPT_LOCK = __import__("threading").Lock()
-
-
-def _tracked_local_checkpoint(
-    df: DataFrame, eager: bool = True
-) -> tuple[DataFrame, set]:
-    """localCheckpoint + the set of persistent-RDD ids it registered, so the
-    loop can free superseded rounds (C3 unpersist hygiene: without this,
-    every round's label table stays in the block store for the session's
-    lifetime). The before/after diff of ALL persistent RDDs would mis-capture
-    a concurrent driver thread's cache on a shared session, so the
-    checkpoint runs under a module lock — serializing only the (driver-side,
-    cheap) checkpoint registration, not the Spark jobs themselves.
-
-    ``eager=False`` skips the materializing count: the checkpoint RDD is
-    registered (and tracked) at mark time, and whichever downstream action
-    first touches it computes + stores the blocks — callers use this to fold
-    several materializations into one blocking job (the union-find loop's
-    one-job-per-round protocol)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    with _CKPT_LOCK:
-        # non-eager: the persist REGISTRATION happens at mark time (cheap,
-        # driver-side) — only that sits under the lock; the materializing
-        # Spark job runs below, outside it, so concurrent threads' jobs
-        # still overlap
-        before = set(jsc.getPersistentRDDs().keySet().toArray())
-        out = df.localCheckpoint(eager=False)
-        after = set(jsc.getPersistentRDDs().keySet().toArray())
-    if eager:
-        out.count()  # eager semantics preserved for callers
-    return out, after - before
-
-
-def _unpersist_ids(spark, ids: set) -> None:
-    persistent = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = persistent.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
+        return _cc_loop(adj, max_iter)
 
 
 def _init_labels(adj: DataFrame) -> DataFrame:
@@ -156,8 +113,6 @@ def _init_labels(adj: DataFrame) -> DataFrame:
 
 
 def _cc_loop(adj: DataFrame, max_iter: int) -> DataFrame:
-    spark = adj.sparkSession
-
     # ONE blocking job per round: labels are never materialized on their own
     # — round r's convergence count is the single action, and it computes
     # (and checkpoints) everything the round needs: the adjacency (round 0),
@@ -170,7 +125,7 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> DataFrame:
     # forests of stars (exact groups + hot-bucket routing emit anchor->member
     # edges) whose init labels are already final — they converge in ONE job.
     labels = _init_labels(adj)  # lazy; referenced twice by round 0 (cheap agg)
-    prev_ids: set = set()
+    done = Scope()  # the newest materialized round
 
     for it in range(max_iter):
         # propagate: every neighbor's label is a candidate for mine. The old
@@ -192,18 +147,19 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> DataFrame:
         # (all partitions — count scans everything), cuts the round's
         # lineage, and leaves the blocks cached for the doubling join /
         # the final result — one job does the whole round.
-        stepped, step_ids = _tracked_local_checkpoint(stepped_plan, eager=False)
-        try:
-            changed = stepped.filter("label != old_label").count()
-        except BaseException:
-            # a cancelled/failed round must not leak its checkpoint blocks
-            # (r4 ADVICE #3)
-            _unpersist_ids(spark, step_ids)
-            raise
-        # the previous round's checkpoint is superseded the moment this
-        # one materializes — free it
-        _unpersist_ids(spark, prev_ids)
-        prev_ids = step_ids
+        # The previous round's checkpoint is superseded the moment this one
+        # materializes — free it on the way out, success or failure.
+        with done:
+            step = Scope()
+            try:
+                stepped = step.truncate(stepped_plan, eager=False)
+                changed = stepped.filter("label != old_label").count()
+            except BaseException:
+                # a cancelled/failed round must not leak its checkpoint
+                # blocks (r4 ADVICE #3)
+                step.release()
+                raise
+        done = step
         if changed == 0:
             # stepped IS the fixpoint label table (checkpointed; its blocks
             # are reclaimed by the ContextCleaner when the returned frame is
@@ -223,7 +179,7 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> DataFrame:
             stepped.join(lut, stepped["label"] == lut["l_url"], "left")
             .select("url", final_label.alias("label"))
         )
-    _unpersist_ids(spark, prev_ids)
+    done.release()
     raise RuntimeError(f"union-find did not converge in {max_iter} rounds")
 
 

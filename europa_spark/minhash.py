@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from .config import DedupConfig, CANONICAL
+from .scope import cache_in
 
 
 def maybe_broadcast(df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -392,11 +393,12 @@ def candidate_pairs(
     batch run (tests/test_incremental.py). A probe that is itself the
     bucket min emits no star edges; no test pins that case yet.
 
-    ``registry``: the band table is cached ONCE, pre-partitioned on the
-    bucket key, and ONE barrier job materializes it and the bucket stats
-    (the stats aggregate is the cache's first consumer, so the lazy persist
-    fills en route); both frames go into the registry for the caller to
-    unpersist. ``registry=None`` returns a lazy plan and launches no job.
+    ``registry=None`` returns a lazy plan and launches no job. With a
+    registry (a ``europa_spark.scope.Scope`` or a plain list) the band
+    table is cached ONCE, pre-partitioned on the bucket key, and ONE
+    barrier job materializes it and the bucket stats (the stats aggregate
+    is the cache's first consumer, so the lazy persist fills en route);
+    both frames go into the registry for the caller to release.
     """
     keys = ["band_idx", "band_hash"]
     cols = ["url", *payload]
@@ -405,10 +407,7 @@ def candidate_pairs(
     # distribution (only the salted join re-keys). Cached, the exchange is
     # written once, not once per downstream reference (~340 MB each in a
     # 1M-row event log: AQE does not reuse exchanges across references).
-    bands = bands.repartition(*keys)
-    if registry is not None:
-        bands = bands.persist()
-        registry.append(bands)
+    bands = cache_in(registry, bands.repartition(*keys))
     # bucket stats via hash aggregation (map-side partial combine), NOT a
     # window: one compact row per distinct bucket, singleton buckets (the
     # vast majority) dropped before the join. The anchor's payload rides
@@ -422,13 +421,10 @@ def candidate_pairs(
         )
         .filter(F.col("bucket_n") >= 2)
     )
-    if registry is not None:
-        stats = stats.persist()
-        registry.append(stats)
-        # barrier-vs-race, measured both ways (r6): racing the consumers
-        # wins ~0.2-0.4 s/query at sf0.1 but LOSES at 200k docs
-        # (interleaved pipeline A/B min 16.1 eager vs 17.1 lazy)
-        stats.count()
+    # barrier-vs-race, measured both ways (r6): racing the consumers wins
+    # ~0.2-0.4 s/query at sf0.1 but LOSES at 200k docs (interleaved
+    # pipeline A/B min 16.1 eager vs 17.1 lazy)
+    stats = cache_in(registry, stats, eager=True)
     n = F.col("bucket_n")
     salt = F.pmod(
         F.xxhash64("url", *keys), F.ceil(n / F.lit(cfg.salt_sub_cap)).cast("int")
@@ -616,26 +612,10 @@ def verify_pairs(
     selectivity), so pruning BEFORE any recompute keeps wide data out of
     the signature stage entirely.
 
-    ``registry=None``: intermediates unpersist on return (recompute per
-    consumer); pass a registry to cache across consumers (see
-    candidate_pairs)."""
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _verify_pairs(candidates, sigs, cfg, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _verify_pairs(
-    candidates: DataFrame,
-    sigs: DataFrame,
-    cfg: DedupConfig,
-    registry: list,
-) -> DataFrame:
+    ``registry=None`` returns a lazy plan and launches no job. With a
+    registry the pruned text is cached and materialized by one barrier job
+    (both pair joins consume it) and goes into the registry for the caller
+    to release."""
     # the hint ships only urls; cfg.broadcast_hints=False at scales where
     # the candidate url set outgrows broadcast (AQE plans the semi-join)
     needed = candidates.select(
@@ -655,11 +635,14 @@ def _verify_pairs(
             )
         )
     else:
-        pruned = sigs.select("url", "extracted").join(
-            maybe_broadcast(needed, cfg), "url", "left_semi"
-        ).persist()
-        registry.append(pruned)
-        pruned.count()  # both text joins consume this — don't race the scan
+        # both text joins consume this — don't race the scan
+        pruned = cache_in(
+            registry,
+            sigs.select("url", "extracted").join(
+                maybe_broadcast(needed, cfg), "url", "left_semi"
+            ),
+            eager=True,
+        )
         pj = make_pair_jaccard_udf(cfg)
         a = pruned.select(
             F.col("url").alias("url_a"), F.col("extracted").alias("text_a")
@@ -739,27 +722,12 @@ def minhash_pairs(
 ) -> DataFrame:
     """Full near-dup path: representatives -> confirmed minhash pairs.
 
-    ``registry``: optional list collecting every DataFrame persisted here so
-    the caller can unpersist them when done (pipeline.run's release()).
-    With ``registry=None`` the intermediates are unpersisted on return and
-    the lazy result recomputes them per consumer."""
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _minhash_pairs(reps, cfg, sigs, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _minhash_pairs(
-    reps: DataFrame,
-    cfg: DedupConfig,
-    sigs: DataFrame | None,
-    registry: list,
-) -> DataFrame:
+    ``registry=None`` returns a lazy plan and launches no job. With a
+    registry (a ``europa_spark.scope.Scope`` or a plain list) the
+    signatures (when computed here), band table, bucket stats, candidates
+    and pruned verify text are cached, the candidate and verify barriers run, and every cached
+    frame goes into the registry for the caller to release (pipeline.run's
+    ``release()``)."""
     if sigs is None:
         # narrow minhash-only signatures (~1 KB/row): the band subtree
         # references this several times — persist so the UDF runs once.
@@ -767,9 +735,9 @@ def _minhash_pairs(
         # concurrent-free) consumer, so one job materializes the reps
         # cache, this signature cache, the repartitioned band table and
         # the bucket stats back-to-back instead of three barrier jobs.
-        sigs = with_signatures(reps, cfg, include_shingles=False).persist()
-        if registry is not None:
-            registry.append(sigs)
+        sigs = cache_in(
+            registry, with_signatures(reps, cfg, include_shingles=False)
+        )
     raw_cands = candidate_pairs(band_table(sigs, cfg), cfg, registry=registry)
     if cfg.verify_est_margin is not None and "minhash" in sigs.columns:
         # estimate-prune on the narrow signatures BEFORE anything wide moves
@@ -781,9 +749,7 @@ def _minhash_pairs(
     # joins); it is small (LSH selectivity) — persist so the band self-join
     # runs once. LAZY: verify's pruned-text barrier consumes the url prune
     # first (no concurrent reference), filling this cache en route.
-    cands = raw_cands.persist()
-    if registry is not None:
-        registry.append(cands)
+    cands = cache_in(registry, raw_cands)
     # verify recomputes shingles for candidate urls only when sigs are
     # narrow: reps carries the text
     verify_source = sigs if "shingles" in sigs.columns else reps

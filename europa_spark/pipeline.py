@@ -16,18 +16,14 @@ resume (north rule).
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointStore
-from .cluster import (
-    _tracked_local_checkpoint,
-    _unpersist_ids,
-    cluster_members,
-    connected_components,
-)
+from .cluster import cluster_members, connected_components
 from .config import DedupConfig, CANONICAL
 from .exact import content_hash_col, exact_pairs, exact_membership
 from .extract import split_quarantine, with_extracted
@@ -38,6 +34,7 @@ from .minhash import (
     with_signatures,
 )
 from .progress import ProgressTracker
+from .scope import Scope
 from .simhash import simhash_pairs
 from .substring import substring_pairs
 
@@ -102,9 +99,9 @@ def run(
 ) -> dict[str, DataFrame]:
     """Returns {'quarantine', 'membership', 'pairs', 'components',
     'clusters', 'report', 'release'} — DataFrames plus a ``release()``
-    callable that unpersists every frame this run cached (call it when done
-    consuming the outputs; a long-lived session otherwise accumulates
-    storage blocks across runs).
+    callable that frees every block this run cached or checkpointed (its
+    ``Scope``; call it when done consuming the outputs — a long-lived
+    session otherwise accumulates storage blocks across runs).
 
     ``tracker`` (europa_spark.progress.ProgressTracker) receives live
     begin/end events per stage — the S5 progress stream — with or without a
@@ -112,56 +109,32 @@ def run(
     """
     spark = docs.sparkSession
 
-    import os as _os
-    import sys as _sys
-    import time as _time
+    # Every frame this run caches or truncates is held here; ``release``
+    # frees exactly those blocks. Persists are LAZY: they mark multi-consumer
+    # subtrees for caching but add no materialization barrier, so the final
+    # actions trigger the whole DAG in one pass (the r01 design eagerly
+    # persist().count()ed every stage: ~10 serial job barriers that
+    # dominated wall time as a corpus-independent floor). Truncations are
+    # EAGER localCheckpoints — one barrier job, after which downstream
+    # actions plan against a leaf LogicalRDD instead of the full composed
+    # tree. The deep frames here (signatures -> bands -> candidates ->
+    # verify -> union) nest the whole upstream plan MULTIPLICATIVELY (each
+    # self-join/union repeats the subtree), and Catalyst re-analyzes +
+    # cache-matches that tree on EVERY downstream action — measured ~2 s of
+    # pure driver planning per action on the cached pairs frame at sf0.1
+    # (count() on fully-cached 248 rows: 2.65 s; same count after
+    # truncation: 0.11 s). The union-find loop alone paid it 2-3 times per
+    # run (r5's "components ~5.7 s driver floor" was mostly this).
+    scope = Scope()
 
-    _timing = _os.environ.get("EUROPA_STAGE_TIMING") == "1"
-    persisted: list[DataFrame] = []
-
-    def _persist(df: DataFrame) -> DataFrame:
-        # LAZY persist: marks the subtree for caching so multi-consumer
-        # frames compute once, but adds no materialization barrier — the
-        # final actions trigger the whole DAG in one pass. (The r01 design
-        # eagerly persist().count()ed every stage: ~10 serial job barriers
-        # that dominated wall time as a corpus-independent floor.)
-        persisted.append(df)
-        return df.persist()
-
-    ckpt_ids: set = set()
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        # EAGER materialization that ALSO cuts lineage (localCheckpoint):
-        # one barrier job, after which downstream actions
-        # plan against a leaf LogicalRDD instead of the full composed tree.
-        # The deep frames here (signatures -> bands -> candidates -> verify
-        # -> union) nest the whole upstream plan MULTIPLICATIVELY (each
-        # self-join/union repeats the subtree), and Catalyst re-analyzes +
-        # cache-matches that tree on EVERY downstream action — measured
-        # ~2 s of pure driver planning per action on the cached pairs frame
-        # at sf0.1 (count() on fully-cached 248 rows: 2.65 s; same count
-        # after truncation: 0.11 s). The union-find loop alone paid it 2-3
-        # times per run (r5's "components ~5.7 s driver floor" was mostly
-        # this). Blocks are tracked and freed by release() like persists.
-        out, ids = _tracked_local_checkpoint(df)
-        ckpt_ids.update(ids)
-        return out
-
-    def release() -> None:
-        for df in persisted:
-            df.unpersist()
-        persisted.clear()
-        _unpersist_ids(spark, ckpt_ids)
-        ckpt_ids.clear()
-
-    def stage(name: str, compute):
-        _t0 = _time.time() if (tracker is None) else tracker.begin(name)
+    def stage(name: str, compute, stored: bool = True):
+        t0 = tracker.begin(name) if tracker is not None else 0.0
         # tag every job this stage launches (thread-local): the Spark UI and
         # the event log then attribute shuffle/CPU metrics to the pipeline
         # stage by name (tools/stage_bytes.py reads them back)
         spark.sparkContext.setJobDescription(f"europa:{name}")
         try:
-            if store is None:
+            if store is None or not stored:
                 # store-less: stages stay lazy; only genuinely
                 # multi-consumer frames are persisted by the caller below.
                 return compute()
@@ -172,37 +145,32 @@ def run(
         finally:
             spark.sparkContext.setJobDescription(None)
             if tracker is not None:
-                tracker.end(name, _t0)
-            if _timing:
-                print(f"STAGE {name}: {_time.time()-_t0:.2f}s",
-                      file=_sys.stderr, flush=True)
+                tracker.end(name, t0)
 
     filtered = apply_filters(docs, cfg)
     extracted = with_extracted(filtered)
     clean, quarantine = split_quarantine(extracted)
-    # every downstream branch (membership, reps/signatures, report, clusters)
-    # re-reads clean docs: cache extraction so the scan+regex chain runs once
-    # instead of per branch. Narrow FIRST — downstream only needs
-    # (url, warc_ts, extracted); keeping the html binary out of the cache
-    # roughly halves the stored bytes (the in-memory analog of ReadSchema
-    # pruning on a checkpoint table).
-    # LAZY persist (r6; was an eager barrier): the first action to touch
-    # clean is the signatures checkpoint job, and its winner-url BROADCAST
-    # is a blocking dependency of the semi-join stream stage — Spark
-    # materializes the broadcast subtree (clean cache -> membership cache ->
-    # winner urls) BEFORE launching the stage that streams the clean cache,
-    # so the extract chain still runs exactly once and the separate
-    # materialization job round-trip is saved. Tracked as its own stage
-    # (timing only — no checkpoint table) so the scaling profile attributes
-    # the scan+extract+cache bytes to the right phase (near-zero now: the
-    # fill bills to signatures_dual).
-    _t0 = tracker.begin("extract_clean") if tracker is not None else _time.time()
-    try:
-        # content_hash is computed INTO the cache (sha2 is CPU, which
-        # scales; a separate hashing pass would re-stream the 2.5 KB/row
-        # text column out of the cache — bytes, which don't): membership
-        # then reads only (url, ts, 64 B hash) via columnar pruning
-        clean = _persist(
+
+    def cache_clean() -> DataFrame:
+        # every downstream branch (membership, reps/signatures, report,
+        # clusters) re-reads clean docs: cache extraction so the scan+regex
+        # chain runs once instead of per branch. Narrow FIRST — downstream
+        # only needs (url, warc_ts, extracted); keeping the html binary out
+        # of the cache roughly halves the stored bytes (the in-memory analog
+        # of ReadSchema pruning on a checkpoint table). content_hash is
+        # computed INTO the cache (sha2 is CPU, which scales; a separate
+        # hashing pass would re-stream the 2.5 KB/row text column out of the
+        # cache — bytes, which don't): membership then reads only
+        # (url, ts, 64 B hash) via columnar pruning.
+        #
+        # LAZY persist (r6; was an eager barrier): the first action to touch
+        # clean is the signatures checkpoint job, and its winner-url
+        # BROADCAST is a blocking dependency of the semi-join stream stage —
+        # Spark materializes the broadcast subtree (clean cache -> membership
+        # cache -> winner urls) BEFORE launching the stage that streams the
+        # clean cache, so the extract chain still runs exactly once and the
+        # separate materialization job round-trip is saved.
+        cached = scope.persist(
             clean.select("url", "warc_ts", "extracted").withColumn(
                 "content_hash", content_hash_col()
             )
@@ -220,16 +188,14 @@ def run(
         # fill — interleaved A/B measured it SLOWER everywhere warm
         # (sf0.1: 4.87 lazy vs 5.15 eager; 1M same-session toggle:
         # 45.3 lazy vs 50.9 eager min-of-2), so the fill stays lazy.
-        if _os.environ.get("EUROPA_EAGER_CLEAN") == "1":  # diagnosis hook
-            spark.sparkContext.setJobDescription("europa:extract_clean")
-            clean.count()
-            spark.sparkContext.setJobDescription(None)
-    finally:
-        if tracker is not None:
-            tracker.end("extract_clean", _t0)
-        if _timing:
-            print(f"STAGE extract_clean: {_time.time()-_t0:.2f}s",
-                  file=_sys.stderr, flush=True)
+        if os.environ.get("EUROPA_EAGER_CLEAN") == "1":  # diagnosis hook
+            cached.count()
+        return cached
+
+    # its own stage (timing only — no checkpoint table) so the scaling
+    # profile attributes the scan+extract+cache bytes to the right phase
+    # (near-zero now: the fill bills to signatures_dual)
+    clean = stage("extract_clean", cache_clean, stored=False)
     # quarantine stays lazy without a store: it is an output, not an input
     # of any later stage — eager materialization would bill a full extra
     # extract pass to every pipeline run that never reads it
@@ -238,7 +204,7 @@ def run(
 
     # narrow frame consumed by exact pairs AND the winner-url projection
     membership = stage(
-        "membership", lambda: _persist(exact_membership(clean, cfg))
+        "membership", lambda: scope.persist(exact_membership(clean, cfg))
     )
     # representatives WITHOUT moving text: membership's window shuffles only
     # narrow columns (url, ts, hash), and the winner-url set broadcasts back
@@ -276,7 +242,7 @@ def run(
             # needs winnow fps would fail downstream (r3 ADVICE #2).
             dual = stage(
                 "signatures_dual",
-                lambda: _truncate(
+                lambda: scope.truncate(
                     with_dual_signatures(
                         spread_kernel_input(reps, filtered), cfg
                     )
@@ -304,14 +270,14 @@ def run(
                         stage,
                         "pairs_minhash",
                         lambda: minhash_pairs(
-                            reps, cfg, sigs=sigs, registry=persisted
+                            reps, cfg, sigs=sigs, registry=scope
                         ),
                     )
                     f_ss = pool.submit(
                         stage,
                         "pairs_substring",
                         lambda: substring_pairs(
-                            reps, cfg, registry=persisted, fp_arrays=dual
+                            reps, cfg, registry=scope, fp_arrays=dual
                         ),
                     )
                     pair_frames.append(f_mh.result())
@@ -321,7 +287,7 @@ def run(
                     stage(
                         "pairs_minhash",
                         lambda: minhash_pairs(
-                            reps, cfg, sigs=sigs, registry=persisted
+                            reps, cfg, sigs=sigs, registry=scope
                         ),
                     )
                 )
@@ -329,7 +295,7 @@ def run(
                     stage(
                         "pairs_substring",
                         lambda: substring_pairs(
-                            reps, cfg, registry=persisted, fp_arrays=dual
+                            reps, cfg, registry=scope, fp_arrays=dual
                         ),
                     )
                 )
@@ -340,7 +306,7 @@ def run(
             # Eager: bands stats + band join consume this concurrently.
             sigs = stage(
                 "signatures",
-                lambda: _truncate(
+                lambda: scope.truncate(
                     with_signatures(
                         spread_kernel_input(reps, filtered),
                         cfg,
@@ -351,21 +317,21 @@ def run(
             pair_frames.append(
                 stage(
                     "pairs_minhash",
-                    lambda: minhash_pairs(reps, cfg, sigs=sigs, registry=persisted),
+                    lambda: minhash_pairs(reps, cfg, sigs=sigs, registry=scope),
                 )
             )
         elif "substring" in methods:
             pair_frames.append(
                 stage(
                     "pairs_substring",
-                    lambda: substring_pairs(reps, cfg, registry=persisted),
+                    lambda: substring_pairs(reps, cfg, registry=scope),
                 )
             )
         if "simhash" in methods:
             pair_frames.append(
                 stage(
                     "pairs_simhash",
-                    lambda: simhash_pairs(reps, cfg, registry=persisted),
+                    lambda: simhash_pairs(reps, cfg, registry=scope),
                 )
             )
 
@@ -374,7 +340,7 @@ def run(
     # components stage timer measures only the clustering loop)
     pairs = stage(
         "pairs",
-        lambda: _truncate(
+        lambda: scope.truncate(
             reduce(DataFrame.unionByName, pair_frames)
             .dropDuplicates(["url_a", "url_b"])
         ),
@@ -419,5 +385,5 @@ def run(
         "components": components,
         "clusters": clusters,
         "report": report,
-        "release": release,
+        "release": scope.release,
     }

@@ -268,9 +268,10 @@ def simhash_pairs(
     score = (64 - hamming) / 64; the reference's dot score is recoverable as
     64 - 2*hamming (QdrantRepository.cs:240-247).
 
-    ``registry``: the band table and bucket stats are cached (one barrier
-    job, the signature UDF runs once inside it) and registered for the
-    caller to unpersist; ``registry=None`` returns a lazy plan (see
+    ``registry=None`` returns a lazy plan and launches no job. With a
+    registry (a ``europa_spark.scope.Scope`` or a plain list) the band table
+    and bucket stats are cached (one barrier job, the signature UDF runs
+    once inside it) and go into the registry for the caller to release (see
     minhash.candidate_pairs).
     """
     if sigs is None:

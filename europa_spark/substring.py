@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from .config import DedupConfig, CANONICAL
+from .scope import cache_in
 
 _U64 = np.uint64
 _ROLL_BASE = _U64(1099511628211)  # FNV prime, odd
@@ -205,28 +206,13 @@ def substring_pairs(
     once for minhash AND winnowing (minhash.with_dual_signatures); it must
     already be materialized.
 
-    ``registry=None``: intermediates unpersist on return (recompute per
-    consumer); pass a registry to cache across consumers (see
-    minhash.minhash_pairs).
+    ``registry=None`` returns a lazy plan and launches no job. With a
+    registry (a ``europa_spark.scope.Scope`` or a plain list) the
+    fingerprint arrays (when computed here), the fp-partitioned exploded
+    relation and the rare-fingerprint set are cached, one barrier job
+    materializes them, and every cached frame goes into the registry for
+    the caller to release.
     """
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _substring_pairs(reps, cfg, max_df, registry, fp_arrays)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _substring_pairs(
-    reps: DataFrame,
-    cfg: DedupConfig,
-    max_df: int,
-    registry: list,
-    fp_arrays: DataFrame | None,
-) -> DataFrame:
     if fp_arrays is None:
         # the winnow kernel is the expensive part and this DAG consumes the
         # fingerprint relation three times (df-count branch + both self-join
@@ -235,9 +221,7 @@ def _substring_pairs(
         # fingerprints table. LAZY: the rare barrier below is the first
         # consumer and fills this cache en route (no racing stage touches
         # it earlier), so the UDF still runs exactly once.
-        fp_arrays = with_fingerprints(reps, cfg).persist()
-        if registry is not None:
-            registry.append(fp_arrays)
+        fp_arrays = cache_in(registry, with_fingerprints(reps, cfg))
     else:
         fp_arrays = fp_arrays.select("uid", "url", "fps")
     id_map = fp_arrays.select("uid", "url")
@@ -255,13 +239,10 @@ def _substring_pairs(
     # the df-cap groupBy, the rare join, and the self-join are all
     # exchange-free (HashPartitioning(fp) satisfies every downstream
     # distribution; AQE leaves cached-plan partitioning intact by default).
-    fps = (
-        fp_arrays.select("uid", F.explode("fps").alias("fp"))
-        .repartition("fp")
-        .persist()
+    fps = cache_in(
+        registry,
+        fp_arrays.select("uid", F.explode("fps").alias("fp")).repartition("fp"),
     )
-    if registry is not None:
-        registry.append(fps)
     # stop-fingerprint cap: a fingerprint shared by thousands of docs is
     # boilerplate, not evidence of a copied passage. Aggregation runs
     # in-place on the fp-partitioned cache (no exchange).
@@ -273,15 +254,14 @@ def _substring_pairs(
     # now lazy — each self-join side streams the fps cache and hash-probes
     # the small cached rare side, exchange-free and without a second
     # exploded-relation-sized block-store copy.
-    rare = (
+    rare = cache_in(
+        registry,
         fps.groupBy("fp")
         .count()
         .filter((F.col("count") > 1) & (F.col("count") <= max_df))
-        .select("fp")
-    ).persist()
-    rare.count()
-    if registry is not None:
-        registry.append(rare)
+        .select("fp"),
+        eager=True,
+    )
     # SHUFFLE_HASH on the RARE side only: a sort-merge plan here SORTS the
     # full exploded relation, and those sort buffers shrink linearly with
     # core count — measured 0 MB spilled at 8 cores vs 9,067 MB at 32 in

@@ -27,7 +27,13 @@ def test_queries_and_oracles_consistent():
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_each_query_runs(spark, name):
+    """Every query returns a frame, and none leaks a persisted frame into
+    the session's CacheManager (earlier test modules may hold their own
+    cached fixtures, so the count must come back to where it started)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.numCachedEntries()
     fn = entrymod.queries()[name]
     df = fn(spark, SF)
+    assert cache.numCachedEntries() == cached_before, name
     assert df.columns, name
     assert df.count() >= 0

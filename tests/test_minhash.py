@@ -17,6 +17,8 @@ from europa_spark.minhash import (
     verify_pairs,
     with_signatures,
 )
+from europa_spark.simhash import simhash_pairs
+from europa_spark.substring import substring_pairs
 
 
 @pytest.fixture(scope="module")
@@ -185,3 +187,40 @@ def test_mega_bucket_star_only(spark):
         (r["url_a"], r["url_b"]) for r in candidate_pairs(bands, cfg).collect()
     }
     assert rows == {("m0", f"m{i}") for i in range(1, 8)}
+
+
+def _jobs_and_caches(spark):
+    sc = spark.sparkContext
+    return (
+        set(sc.statusTracker().getJobIdsForGroup(None)),
+        set(sc._jsc.getPersistentRDDs().keySet().toArray()),
+        spark._jsparkSession.sharedState().cacheManager().numCachedEntries(),
+    )
+
+
+@pytest.mark.parametrize(
+    "call",
+    ["minhash_pairs", "verify_pairs", "substring_pairs", "candidate_pairs",
+     "simhash_pairs"],
+)
+def test_registry_less_pair_calls_are_lazy(spark, reps, sigs, call):
+    """The one pair-function contract: ``registry=None`` returns a lazy plan
+    — no barrier job runs and nothing is persisted (a registry-less caller
+    would only recompute whatever was cached and dropped on return)."""
+    build = {
+        "minhash_pairs": lambda: minhash_pairs(reps),
+        "verify_pairs": lambda: verify_pairs(
+            candidate_pairs(band_table(sigs)), reps
+        ),
+        "substring_pairs": lambda: substring_pairs(reps),
+        "candidate_pairs": lambda: candidate_pairs(band_table(sigs)),
+        "simhash_pairs": lambda: simhash_pairs(reps),
+    }[call]
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    jobs, rdds, entries = _jobs_and_caches(spark)
+    out = build()
+    new_jobs, new_rdds, new_entries = _jobs_and_caches(spark)
+    assert set(out.columns) >= {"url_a", "url_b"}
+    assert new_jobs == jobs, f"{call} launched jobs {sorted(new_jobs - jobs)}"
+    assert new_rdds <= rdds, f"{call} persisted RDDs {sorted(new_rdds - rdds)}"
+    assert new_entries == entries, f"{call} added CacheManager entries"
